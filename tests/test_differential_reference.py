@@ -1619,7 +1619,7 @@ def test_zorder_key_matches_bruteforce(spark, seed):
     df = spark.createDataFrame(rows, "x long, y long")
     got = [
         (r["x"], r["y"], r["k"])
-        for r in df.select("x", "y", zorder_key(F.col("x"), F.col("y")).alias("k")).collect()
+        for r in df.select("x", "y", zorder_key("x", "y").alias("k")).collect()
     ]
     for x, y, k in got:
         assert k == _morton_ref(x, y), (x, y, k)

@@ -565,3 +565,53 @@ def test_merge_upsert_empty_updates_no_table_created(spark, tmp_path):
     )
     assert merge_upsert(spark, path, empty, ["k"], partition_ts_col="ts") == []
     assert not os.path.exists(path)
+
+
+def test_append_only_log_resync_reads_each_issue_once(
+    spark, raw_issues, raw_changelog, tmp_path
+):
+    """An append-only raw issue log keeps every exported version. The
+    issue whose version set the watermark is updated again; the next
+    sync's ``>=`` watermark predicate selects both its versions. The
+    sync must still read the issue once: one ``issues`` row per key
+    (the newer version), and metrics equal to a single-read run."""
+    holder = F.col("key") == "TEST-1"
+    v1 = raw_issues.withColumn(
+        "updatedAt",
+        F.when(holder, F.lit("2023-05-20T10:00:00.000000+0000")).otherwise(
+            F.col("updatedAt")
+        ),
+    )
+    v2 = v1.where(holder).withColumn("summary", F.lit("Retitled")).withColumn(
+        "updatedAt", F.lit("2023-05-21T10:00:00.000000+0000")
+    )
+    log = v1.unionByName(v2)
+
+    out = str(tmp_path / "wh_log")
+    state = FileStateStore(str(tmp_path / "state.json"))
+    first = run_etl(
+        v1, raw_changelog, out, state=state,
+        search=SearchSpec(watermark=dt.datetime(2023, 1, 1)),
+    )
+    assert first.watermark == dt.datetime(2023, 5, 20, 10, 0)
+    second = run_etl(log, raw_changelog, out, state=state)
+    assert not second.skipped
+
+    issues = read_latest(spark, f"{out}/issues", DEDUP_KEYS["issues"])
+    assert issues.count() == issues.select("issue_key").distinct().count() == 3
+    t1 = issues.where(F.col("issue_key") == "TEST-1").first()
+    assert t1["title"] == "Retitled"
+
+    single = str(tmp_path / "wh_single")
+    run_etl(
+        v1.where(~holder).unionByName(v2), raw_changelog, single,
+        search=SearchSpec(watermark=dt.datetime(2023, 1, 1)),
+    )
+
+    def metrics(path):
+        cols = ["issue_key", "status_name", "status_transitions_count",
+                "duration", "busdays_duration"]
+        latest = read_latest(spark, f"{path}/issue_metrics", DEDUP_KEYS["issue_metrics"])
+        return sorted(tuple(r) for r in latest.select(*cols).collect())
+
+    assert metrics(out) == metrics(single)

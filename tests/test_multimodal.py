@@ -1,5 +1,5 @@
-"""Multimodal binary-column plumbing tests (decode is stubbed; the Spark
-schema/batching/pruning is real)."""
+"""Multimodal binary-column tests: the pure-Python decoders, and the
+Spark schema/batching/pruning around them."""
 
 import hashlib
 
@@ -24,20 +24,10 @@ def media(spark):
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def test_extract_media_features_fake_decode(spark, media):
-    feats = {r["media_id"]: r for r in extract_media_features(media).collect()}
-    assert set(feats) == {1, 2, 3, 4}
-    expected_sha = hashlib.sha256(b"\x89PNG-fake-payload-1").hexdigest()
-    assert feats[1]["payload_sha256"] == expected_sha
-    assert feats[1]["payload_bytes"] == len(b"\x89PNG-fake-payload-1")
-    assert feats[1]["feature_checksum"] == int(expected_sha[:15], 16)
-    assert feats[4]["payload_sha256"] is None  # null payload survives
-    assert feats[4]["payload_bytes"] == 0
-
-
 def test_real_decode_wav_ppm_end_to_end(spark):
-    """decode="real" executes in-sandbox: pure-Python WAV/PPM parsers
-    recover the exact encoded content (n_elements + checksum)."""
+    """Pure-Python WAV/PPM parsers recover the exact encoded content
+    (n_elements + checksum); payload bytes and sha ride along, and
+    junk rows survive with null features."""
     from yandex_tracker_exporter_spark.multimodal import encode_ppm, encode_wav
 
     samples = [100, -200, 300, -400, 32767, -32768]
@@ -51,16 +41,22 @@ def test_real_decode_wav_ppm_end_to_end(spark):
     feats = {
         r["media_id"]: r
         for r in extract_media_features(
-            spark.createDataFrame(rows, MEDIA_SCHEMA), decode="real"
+            spark.createDataFrame(rows, MEDIA_SCHEMA)
         ).collect()
     }
+    assert set(feats) == {1, 2, 3, 4}
+    assert feats[1]["payload_sha256"] == hashlib.sha256(rows[0][3]).hexdigest()
+    assert feats[1]["payload_bytes"] == len(rows[0][3])
     assert feats[1]["feature_dim"] == len(samples)
     assert feats[1]["feature_checksum"] == sum(samples)
     assert feats[2]["feature_dim"] == 48
     assert feats[2]["feature_checksum"] == sum(pix)
     # unparseable / null payloads are quarantined (null features), not errors
     assert feats[3]["feature_checksum"] is None
+    assert feats[3]["payload_bytes"] == len(b"\x89PNG-not-parseable")
     assert feats[4]["feature_checksum"] is None
+    assert feats[4]["payload_sha256"] is None  # null payload survives
+    assert feats[4]["payload_bytes"] == 0
 
 
 def test_decode_media_full_surface(spark):
@@ -104,9 +100,7 @@ def test_sample_frames_real_y4m(spark):
         (1, "video", "video/y4m", encode_y4m(2, 2, frames, (25, 1)), None, None, 2000),
         (2, "video", "video/mp4", b"not-a-y4m", None, None, 1000),
     ]
-    got = sample_frames(
-        spark.createDataFrame(rows, MEDIA_SCHEMA), every_ms=1000, decode="real"
-    ).collect()
+    got = sample_frames(spark.createDataFrame(rows, MEDIA_SCHEMA), every_ms=1000).collect()
     # 1000ms at 25fps → every 25th frame: indices 0 and 25; id 2 quarantined
     assert {r["media_id"] for r in got} == {1}
     by_idx = sorted(got, key=lambda r: r["frame_idx"])
@@ -157,39 +151,46 @@ def test_metadata_stats_prunes_payload(spark, media, tmp_path):
 def test_frame_sampling_explodes_rows(spark, media):
     import hashlib as _hl
 
-    from yandex_tracker_exporter_spark.multimodal import sample_frames
+    from yandex_tracker_exporter_spark.multimodal import encode_y4m, sample_frames
 
-    # add a video WITH payload (fixture video 4 has null payload)
+    # add a video WITH payload (fixture video 4 has null payload): 7
+    # frames at 2 fps = 3500 ms
+    frames = [bytes([i] * 12) for i in range(7)]
     extra = spark.createDataFrame(
-        [(5, "video", "video/mp4", b"fake-mp4-bytes", None, None, 3500)],
+        [(5, "video", "video/y4m", encode_y4m(2, 2, frames, (2, 1)), None, None, 3500)],
         media.schema,
     )
-    frames = sample_frames(media.union(extra), every_ms=1000).collect()
-    # 3500ms at 1000ms sampling → frames at 0,1000,2000,3000
-    assert len(frames) == 4
-    assert [f["frame_ts_ms"] for f in sorted(frames, key=lambda r: r["frame_idx"])] == [
-        0, 1000, 2000, 3000,
-    ]
-    base = _hl.sha256(b"fake-mp4-bytes").hexdigest()
-    assert frames[0]["frame_sha256"] == _hl.sha256(f"{base}:0".encode()).hexdigest()
+    got = sample_frames(media.union(extra), every_ms=1000).collect()
+    # 1000ms sampling at 2 fps → every 2nd frame: 0,1000,2000,3000 ms
+    assert {f["media_id"] for f in got} == {5}
+    by_idx = sorted(got, key=lambda r: r["frame_idx"])
+    assert [f["frame_idx"] for f in by_idx] == [0, 2, 4, 6]
+    assert [f["frame_ts_ms"] for f in by_idx] == [0, 1000, 2000, 3000]
+    assert by_idx[1]["frame_sha256"] == _hl.sha256(frames[2]).hexdigest()
 
 
 def test_frame_sampling_negative_duration_is_skipped(spark, media):
-    """A negative duration_ms yields zero frames for that row (the old
-    per-row `range(n)` semantics) instead of crashing the whole task
-    (np.repeat raises on negative counts)."""
-    from yandex_tracker_exporter_spark.multimodal import sample_frames
+    """Frames come from the decoded payload, never from the
+    ``duration_ms`` metadata: a negative duration neither crashes the
+    task nor suppresses a decodable video, and payloads that do not
+    decode to frames (zero frame rate, no FRAME, not Y4M) are skipped
+    instead of failing the task."""
+    from yandex_tracker_exporter_spark.multimodal import encode_y4m, sample_frames
 
+    hdr = b"YUV4MPEG2 W2 H2 F0:1 C444\n"
     extra = spark.createDataFrame(
         [
-            (6, "video", "video/mp4", b"negative-duration", None, None, -1500),
-            (7, "video", "video/mp4", b"ok-bytes", None, None, 1500),
+            (6, "video", "video/y4m", hdr + b"FRAME\n" + bytes(12), None, None, -1500),
+            (7, "video", "video/y4m", encode_y4m(2, 2, [bytes(12)] * 3, (2, 1)),
+             None, None, -1500),
+            (8, "video", "video/y4m", encode_y4m(2, 2, [], (2, 1)), None, None, 0),
+            (9, "video", "video/mp4", b"negative-duration", None, None, -1500),
         ],
         media.schema,
     )
     frames = sample_frames(media.union(extra), every_ms=1000).collect()
     assert {f["media_id"] for f in frames} == {7}
-    assert len(frames) == 2  # 0ms and 1000ms
+    assert len(frames) == 2  # 3 frames at 2 fps: 0ms and 1000ms
 
 
 def test_codec_properties():

@@ -132,14 +132,12 @@ def test_zorder_key_bijective(x, y):
 def test_zorder_spark_matches_python(spark):
     """The Spark expression equals the reference interleave on a
     deterministic sample batched through one job."""
-    from pyspark.sql import functions as F
-
     from yandex_tracker_exporter_spark.operators.partitioning import zorder_key
 
     rng = random.Random(5)
     pts = [(rng.randrange(2**16), rng.randrange(2**16)) for _ in range(200)]
     df = spark.createDataFrame(pts, ["x", "y"])
-    rows = df.select("x", "y", zorder_key(F.col("x"), F.col("y")).alias("k")).collect()
+    rows = df.select("x", "y", zorder_key("x", "y").alias("k")).collect()
 
     def interleave(a, b):
         k = 0

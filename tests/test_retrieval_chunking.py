@@ -238,6 +238,24 @@ def test_cdc_chunks_kernel_matches_sql_twin(spark):
         assert len(kern) > len(texts)  # non-vacuous: real cuts happened
 
 
+def test_cdc_kernel_empty_and_all_null_batches(spark):
+    """The kernel's longest-text probe is NaN on an Arrow batch with no
+    non-NULL text; an empty batch yields no rows and an all-NULL batch
+    NULL rows, instead of raising on int(NaN)."""
+    import pandas as pd
+
+    from yandex_tracker_exporter_spark.operators.dedup import (
+        CDC_MASK_MOD,
+        CDC_WINDOW,
+        _cdc_kernel,
+    )
+
+    kern = _cdc_kernel(CDC_WINDOW, CDC_MASK_MOD).func
+    assert len(kern(pd.Series([], dtype=object))) == 0
+    out = kern(pd.Series([None, None], dtype=object))
+    assert len(out) == 2 and out.isna().all().all()
+
+
 # ---------------------------------------------------------------------------
 # sorted-neighborhood
 # ---------------------------------------------------------------------------

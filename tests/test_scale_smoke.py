@@ -88,7 +88,7 @@ def test_pipeline_at_volume(spark, volume_issues, volume_changelog):
     flat = transform_issues(volume_issues, volume_changelog)
     assert flat.count() == N_ISSUES
 
-    metrics = status_metrics(volume_changelog, volume_issues, include_busdays=True)
+    metrics = status_metrics(volume_changelog, volume_issues)
     # each issue passes through each of the 4 statuses exactly once
     assert metrics.count() == N_ISSUES * 4
     row = metrics.where(

@@ -171,7 +171,7 @@ def test_multiband_families_are_independent(spark, corpus):
     sample = corpus.limit(8).select(
         "vec_id",
         *[
-            lsh_bucket_key(F.col("embedding"), 6, DIM, offset=b * 6).alias(f"b{b}")
+            lsh_bucket_key("embedding", 6, DIM, offset=b * 6).alias(f"b{b}")
             for b in range(3)
         ],
     )
@@ -215,7 +215,7 @@ def test_ivf_matches_windowed_reference(spark, corpus):
 
     def assign(df, n):
         scored = df.crossJoin(F.broadcast(cents)).withColumn(
-            "_cd", cosine(F.col("embedding"), F.col("_cv"))
+            "_cd", cosine("embedding", "_cv")
         )
         w = Window.partitionBy(df["vec_id"]).orderBy(
             F.col("_cd").desc(), F.col("centroid_id").asc()
@@ -246,7 +246,7 @@ def test_ivf_matches_windowed_reference(spark, corpus):
         cand.select(
             "query_id",
             "neighbor_id",
-            cosine(F.col("_qv"), F.col("_nv")).alias("cosine_sim"),
+            cosine("_qv", "_nv").alias("cosine_sim"),
         )
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= 3)
@@ -305,7 +305,7 @@ def test_neardup_kernels_match_expression_path(spark):
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("_v"),
         )
-        .withColumn("_nrm", norm(F.col("_v")))
+        .withColumn("_nrm", norm("_v"))
         .withColumn("_proj", multiband_projections(F.col("_v"), 10, 8, 64))
         .select(
             "vec_id",
@@ -321,16 +321,16 @@ def test_neardup_kernels_match_expression_path(spark):
     # pair scorer vs expression cosine on a sample of pairs
     a = emb.select(
         F.col("vec_id").alias("a_id"), F.col("embedding").alias("av")
-    ).withColumn("an", norm(F.transform("av", lambda x: x.cast("double"))))
+    ).withColumn("an", norm("transform(av, x -> CAST(x AS DOUBLE))"))
     b = emb.select(
         F.col("vec_id").alias("b_id"), F.col("embedding").alias("bv")
-    ).withColumn("bn", norm(F.transform("bv", lambda x: x.cast("double"))))
+    ).withColumn("bn", norm("transform(bv, x -> CAST(x AS DOUBLE))"))
     pairs = a.join(b, F.col("a_id") + 1 == F.col("b_id"))
     score = _pair_cosine_kernel()
     both = pairs.select(
         "a_id",
         score("av", "bv", "an", "bn").alias("k"),
-        (dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))).alias("e"),
+        (dot("av", "bv") / (F.col("an") * F.col("bn"))).alias("e"),
     ).collect()
     assert len(both) > 50
     for r in both:

@@ -795,7 +795,7 @@ LEDGER: dict[str, dict[str, list[str]]] = {
     # multimodal
     "media_decode_features": {
         "referee": [
-            f"{MM}::test_extract_media_features_fake_decode",
+            f"{MM}::test_decode_media_full_surface",
             f"{MM}::test_real_decode_wav_ppm_end_to_end",
         ],
         "property": [f"{PLAN9}::test_plan_contract"],

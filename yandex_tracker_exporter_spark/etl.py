@@ -211,6 +211,21 @@ def transform_changelog(
     )
 
 
+def _latest_issue_rows(raw_issues: DataFrame) -> DataFrame:
+    """One raw row per issue ``key``: the one with the greatest parsed
+    ``updatedAt``. An append-only raw issue log keeps every exported
+    version, and the ``>=`` watermark predicate re-selects the version
+    that set the watermark next to any newer one; two rows of one issue
+    would double its ``status_metrics`` (the ``createdAt`` join fans
+    out) and write two ``issues`` rows under one version."""
+    w = Window.partitionBy("key").orderBy(parse_tracker_datetime("updatedAt").desc())
+    return (
+        raw_issues.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 @dataclass
 class EtlResult:
     issues: int
@@ -248,6 +263,7 @@ def run_etl(
 
     if raw_issues.isEmpty():  # F4 short-circuit
         return EtlResult(0, 0, 0, None, skipped=True)
+    raw_issues = _latest_issue_rows(raw_issues)
 
     version = F.current_timestamp()
     issues = transform_issues(raw_issues, raw_changelog, config, extra_columns)

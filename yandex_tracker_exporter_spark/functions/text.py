@@ -16,6 +16,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+def _qident(name: str) -> str:
+    """Backtick-quote a column name for use inside SQL expression text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # Boundary rules, applied in order, then lowercased:
 #   lower-letter→UPPER-letter, lower-letter→digit, digit→lower-letter
 # get an underscore inserted; any remaining non-word char becomes '_'.

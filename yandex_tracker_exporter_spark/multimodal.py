@@ -6,32 +6,30 @@ frame-sample run as Arrow-batched ``mapInPandas`` stages so the JVM
 never materializes decoded frames and each Python worker processes one
 Arrow batch at a time (bounded memory regardless of file count).
 
-Compressed codecs (PIL/ffmpeg/torchaudio) are NOT in this container, so
-two decode modes exist:
+Compressed-codec libraries (PIL/ffmpeg/torchaudio) are not
+dependencies, so every decode stage runs pure-Python parsers for six
+public formats:
 
-- ``decode="fake"`` — deterministic metadata-derived features (the
-  original stub; real Spark plumbing, fake content).
-- ``decode="real"`` — pure-Python parsers for six public formats:
-  **WAV** (RIFF integer PCM at 8/16/24/32-bit, plain or
-  WAVE_FORMAT_EXTENSIBLE-wrapped; IEEE-float → typed quarantine),
-  **PNM** (the whole netpbm family: P1-P3 ASCII and P4-P6 binary
-  bitmaps/graymaps/pixmaps, 8- and 16-bit),
-  **Y4M** (YUV4MPEG2 uncompressed video: C444/C422/C420 siting
-  variants/C411/Cmono, C-less headers defaulting to C420), **PNG**
-  (all RFC 2083
-  still-image shapes: colour types 0/2/3/4/6 at their legal bit
-  depths incl. 16-bit and bit-packed 1/2/4, PLTE expansion, null +
-  Adam7 interlace; zlib DEFLATE via stdlib + all five scanline
-  filters), **JPEG** (baseline
-  + extended sequential at 8- and 12-bit precision, AND progressive
-  SOF2 — spectral selection, successive approximation, DC/AC
-  refinement scans, EOB runs; canonical Huffman from DHT, DC
+- **WAV** (RIFF integer PCM at 8/16/24/32-bit, plain or
+  WAVE_FORMAT_EXTENSIBLE-wrapped; IEEE-float → typed quarantine);
+- **PNM** (the whole netpbm family: P1-P3 ASCII and P4-P6 binary
+  bitmaps/graymaps/pixmaps, 8- and 16-bit);
+- **Y4M** (YUV4MPEG2 uncompressed video: C444/C422/C420 siting
+  variants/C411/Cmono, C-less headers defaulting to C420);
+- **PNG** (all RFC 2083 still-image shapes: colour types 0/2/3/4/6 at
+  their legal bit depths incl. 16-bit and bit-packed 1/2/4, PLTE
+  expansion, null + Adam7 interlace; zlib DEFLATE via stdlib + all
+  five scanline filters);
+- **JPEG** (baseline + extended sequential at 8- and 12-bit precision,
+  AND progressive SOF2 — spectral selection, successive approximation,
+  DC/AC refinement scans, EOB runs; canonical Huffman from DHT, DC
   prediction, zigzag, dequant, 8x8 IDCT, 4:2:0/4:2:2/4:4:4 sampling,
-  restart markers),
-  and **MP4** (ISO BMFF box-level metadata: mvhd duration/timescale,
-  tkhd 16.16 dimensions). These decode actual payload bytes
-  end-to-end; a PIL/ffmpeg kernel for other codecs plugs into the
-  same dispatch table.
+  restart markers);
+- **MP4** (ISO BMFF box-level metadata: mvhd duration/timescale, tkhd
+  16.16 dimensions).
+
+These decode actual payload bytes end-to-end; a PIL/ffmpeg kernel for
+other codecs plugs into the same dispatch table.
 
 Unparseable payloads yield null features instead of failing the task —
 the corrupt-row quarantine posture of SURVEY §2 F8, which is the only
@@ -89,7 +87,7 @@ FEATURE_SCHEMA = StructType(
 # --------------------------------------------------------------------------
 # Pure-Python codecs for codec-free formats (WAV PCM / PPM P6 / Y4M).
 # Encoders double as deterministic fixture builders for tests and the
-# oracle-checked contract query; decoders are the ``decode="real"`` path.
+# oracle-checked contract query; decoders back every decode stage.
 # --------------------------------------------------------------------------
 
 #: Memory/CPU-bomb guard for the raster decoders (PNG / JPEG): maximum
@@ -942,70 +940,42 @@ def _decode_payload_real(payload: bytes | None) -> dict | None:
     return _decode_payload_verbose(payload)[0]
 
 
-def _decode_batch_fake(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic stand-in for the codec stage: features derived from
-    the payload hash, so tests are reproducible without media libs."""
-    payloads = pdf["payload"]
-    sha = payloads.map(
-        lambda b: hashlib.sha256(b).hexdigest() if b is not None else None
-    )
-    return pd.DataFrame(
-        {
-            "media_id": pdf["media_id"],
-            "kind": pdf["kind"],
-            "payload_bytes": payloads.map(lambda b: len(b) if b is not None else 0),
-            "payload_sha256": sha,
-            "feature_dim": 64,
-            "feature_checksum": sha.map(
-                lambda h: int(h[:15], 16) if h is not None else 0
-            ),
-        }
-    )
-
-
-def extract_media_features(df: DataFrame, decode: str = "fake") -> DataFrame:
+def extract_media_features(df: DataFrame) -> DataFrame:
     """Decode/feature-extract media payloads via Arrow-batched mapInPandas.
 
-    ``decode="real"`` runs the pure-Python WAV/PPM/Y4M parsers on the
-    actual payload bytes: ``feature_dim`` becomes the decoded element
-    count (PCM samples / raster bytes) and ``feature_checksum`` the
-    integer sum of decoded values — order-independent exact integer
-    arithmetic, so an oracle can reproduce it. Null/unparseable payloads
-    get null features (quarantine posture). A PIL/ffmpeg kernel for
-    compressed formats extends ``_decode_payload_real``'s dispatch.
+    The pure-Python decoders run on the actual payload bytes:
+    ``feature_dim`` is the decoded element count (PCM samples / raster
+    bytes) and ``feature_checksum`` the integer sum of decoded values —
+    order-independent exact integer arithmetic, so an oracle can
+    reproduce it. Null/unparseable payloads get null features
+    (quarantine posture). A PIL/ffmpeg kernel for compressed formats
+    extends ``_decode_payload_real``'s dispatch.
     """
-    if decode == "real":
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                decoded = pdf["payload"].map(_decode_payload_real)
-                sha = pdf["payload"].map(
-                    lambda b: hashlib.sha256(b).hexdigest() if b is not None else None
-                )
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "kind": pdf["kind"],
-                        "payload_bytes": pdf["payload"].map(
-                            lambda b: len(b) if b is not None else 0
-                        ),
-                        "payload_sha256": sha,
-                        "feature_dim": pd.array(
-                            [d["n_elements"] if d else None for d in decoded],
-                            dtype="Int32",
-                        ),
-                        "feature_checksum": pd.array(
-                            [d["content_checksum"] if d else None for d in decoded],
-                            dtype="Int64",
-                        ),
-                    }
-                )
-
-    else:
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield _decode_batch_fake(pdf)
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            decoded = pdf["payload"].map(_decode_payload_real)
+            sha = pdf["payload"].map(
+                lambda b: hashlib.sha256(b).hexdigest() if b is not None else None
+            )
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "kind": pdf["kind"],
+                    "payload_bytes": pdf["payload"].map(
+                        lambda b: len(b) if b is not None else 0
+                    ),
+                    "payload_sha256": sha,
+                    "feature_dim": pd.array(
+                        [d["n_elements"] if d else None for d in decoded],
+                        dtype="Int32",
+                    ),
+                    "feature_checksum": pd.array(
+                        [d["content_checksum"] if d else None for d in decoded],
+                        dtype="Int64",
+                    ),
+                }
+            )
 
     # Column pruning matters here: select only what the kernel needs so
     # the scan never reads un-needed metadata columns alongside payloads.
@@ -1071,7 +1041,7 @@ QUARANTINE_SCHEMA = StructType(
 
 
 def media_quarantine_report(df: DataFrame) -> DataFrame:
-    """Rows that :func:`decode_media` / the ``decode="real"`` feature
+    """Rows that :func:`decode_media` / the :func:`extract_media_features`
     path quarantine, each with its reason class: "null_payload",
     "unknown_format", "cap_exceeded" (valid header, dimensions above
     ``DECODE_SAMPLE_CAP`` — raise the constant to decode them), or
@@ -1173,91 +1143,44 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(
-    df: DataFrame, every_ms: int = 1000, decode: str = "fake"
-) -> DataFrame:
+def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame-sample video payloads: one output row per sampled frame
     (1→N row explosion inside mapInPandas — the batch shape a real
     ffmpeg kernel needs).
 
-    The fake kernel derives deterministic per-frame hashes from
-    (payload sha, frame index); ``decode="real"`` parses Y4M
-    (YUV4MPEG2) payloads with the pure-Python decoder and hashes the
-    actual raw frame bytes — an ffmpeg kernel for compressed containers
+    Parses Y4M (YUV4MPEG2) payloads with the pure-Python decoder and
+    hashes the actual raw frame bytes; payloads that are NULL or not
+    Y4M yield no frames. An ffmpeg kernel for compressed containers
     replaces the decode call, same batch shape.
     """
-    if decode == "real":
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = {"media_id": [], "frame_idx": [], "frame_ts_ms": [], "frame_sha256": []}
-                for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                    d = _decode_payload_real(payload)
-                    if not d or d.get("format") != "y4m" or not d["n_frames"]:
-                        continue  # quarantine posture: skip, don't fail
-                    num, den = d["fps"]
-                    # source frame stride closest to the sampling period
-                    step = max(1, round(every_ms * num / (1000 * den)))
-                    for idx in range(0, d["n_frames"], step):
-                        out["media_id"].append(media_id)
-                        out["frame_idx"].append(idx)
-                        out["frame_ts_ms"].append(idx * 1000 * den // num)
-                        out["frame_sha256"].append(
-                            hashlib.sha256(d["frames"][idx]).hexdigest()
-                        )
-                yield pd.DataFrame(
-                    {
-                        "media_id": pd.array(out["media_id"], dtype="Int64"),
-                        "frame_idx": pd.array(out["frame_idx"], dtype="Int32"),
-                        "frame_ts_ms": pd.array(out["frame_ts_ms"], dtype="Int64"),
-                        "frame_sha256": pd.array(out["frame_sha256"], dtype="object"),
-                    }
-                )
-
-    else:
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # vectorized 1->N explosion: per-row frame counts -> repeat
-            # media ids -> per-frame indices from cumulative offsets.
-            # (Only the sha256 calls stay per-element: hashing is the
-            # "decode" stand-in and is per-file in a real kernel anyway.)
-            for pdf in batches:
-                ok = pdf["payload"].notna() & pdf["duration_ms"].notna()
-                pdf = pdf[ok]
-                if pdf.empty:
-                    yield pd.DataFrame(
-                        columns=["media_id", "frame_idx", "frame_ts_ms", "frame_sha256"]
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = {"media_id": [], "frame_idx": [], "frame_ts_ms": [], "frame_sha256": []}
+            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
+                d = _decode_payload_real(payload)
+                if not d or d.get("format") != "y4m" or not d["n_frames"]:
+                    continue  # quarantine posture: skip, don't fail
+                num, den = d["fps"]
+                # source frame stride closest to the sampling period
+                step = max(1, round(every_ms * num / (1000 * den)))
+                for idx in range(0, d["n_frames"], step):
+                    out["media_id"].append(media_id)
+                    out["frame_idx"].append(idx)
+                    out["frame_ts_ms"].append(idx * 1000 * den // num)
+                    out["frame_sha256"].append(
+                        hashlib.sha256(d["frames"][idx]).hexdigest()
                     )
-                    continue
-                # clip: a negative duration yields 0 frames (the row is
-                # skipped), matching the per-row `range(n)` semantics —
-                # np.repeat raises on negative counts otherwise
-                n_frames = (
-                    (pdf["duration_ms"] // every_ms).astype("int64") + 1
-                ).clip(lower=0)
-                media_id = np.repeat(pdf["media_id"].to_numpy(), n_frames.to_numpy())
-                ends = n_frames.to_numpy().cumsum()
-                frame_idx = np.arange(ends[-1]) - np.repeat(
-                    ends - n_frames.to_numpy(), n_frames.to_numpy()
-                )
-                base = pdf["payload"].map(lambda b: hashlib.sha256(b).hexdigest())
-                base_rep = np.repeat(base.to_numpy(), n_frames.to_numpy())
-                sha = [
-                    hashlib.sha256(f"{b}:{i}".encode()).hexdigest()
-                    for b, i in zip(base_rep, frame_idx)
-                ]
-                yield pd.DataFrame(
-                    {
-                        "media_id": media_id,
-                        "frame_idx": frame_idx.astype("int32"),
-                        "frame_ts_ms": frame_idx * every_ms,
-                        "frame_sha256": sha,
-                    }
-                )
+            yield pd.DataFrame(
+                {
+                    "media_id": pd.array(out["media_id"], dtype="Int64"),
+                    "frame_idx": pd.array(out["frame_idx"], dtype="Int32"),
+                    "frame_ts_ms": pd.array(out["frame_ts_ms"], dtype="Int64"),
+                    "frame_sha256": pd.array(out["frame_sha256"], dtype="object"),
+                }
+            )
 
-    pruned = df.where(F.col("kind") == "video").select(
-        "media_id", "payload", "duration_ms"
-    )
+    pruned = df.where(F.col("kind") == "video").select("media_id", "payload")
     return pruned.mapInPandas(kernel, FRAME_SCHEMA)
 
 

@@ -326,7 +326,7 @@ def semdedup_prune(
     vecs = df.select(
         F.col(id_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_vec"),
-    ).withColumn("_nrm", norm(F.col("_vec")))
+    ).withColumn("_nrm", norm("_vec"))
     # materialize (vec, norm, cluster) once; both prune-join sides and
     # the final keep-flag join read the barrier instead of re-running
     # the norm fold + assignment

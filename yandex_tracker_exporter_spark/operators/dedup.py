@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from yandex_tracker_exporter_spark.functions.text import _qident
+
 from .partitioning import ensure_parallelism
 
 # Coefficients for the universal-hash family h_i(x) = (a_i*x + b_i) mod P.
@@ -121,11 +123,6 @@ def _hash64(col: Column) -> Column:
         F.lit(0).cast("long"),
         lambda h, c: (h * POLY_BASE + c) % MINHASH_PRIME,
     )
-
-
-def _qident(name: str) -> str:
-    """Backtick-quote a column name for the SQL fast paths."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _codepoints(col: Column) -> Column:
@@ -1311,7 +1308,9 @@ def _cdc_kernel(window: int, mask_mod: int):
     )
     def chunks(texts: pd.Series) -> pd.DataFrame:
         idx_out, start_out, len_out, hash_out = [], [], [], []
-        n_max = int(texts.str.len().max() or 0)
+        # an empty or all-NULL batch has a NaN max length
+        lens = texts.str.len()
+        n_max = int(lens.max()) if lens.notna().any() else 0
         pw = _pow_mod_arr(b, n_max, p)
         inv_pw = _pow_mod_arr(inv_b, n_max, p)
         for t in texts:
@@ -1535,7 +1534,6 @@ def prefix_filter_jaccard_join(
     id_col: str = "doc_id",
     threshold_milli: int = 700,
     shingle_k: int = 12,
-    materialize_prefixes: bool = False,
 ) -> DataFrame:
     """EXACT thresholded set-similarity self-join via prefix filtering
     (Chaudhuri/Bayardo AllPairs): every pair with token-set Jaccard ≥ t
@@ -1608,31 +1606,14 @@ def prefix_filter_jaccard_join(
                 )
             ).alias("_pos", "_tok"),
         )
-        # `materialize_prefixes` (r12 batch 7, guide §2.4 then §1):
-        # `prefixes` feeds BOTH sides of the candidate self-join, so the
-        # subtree above — shingle explode, df-count aggregate +
-        # broadcast build, rarest-first collect_list sort, posexplode —
-        # executes TWICE without a barrier (the plan shows the operator
-        # chain duplicated per side). A localCheckpoint here computes it
-        # once — but three paired A/B rounds at sf0.1 all measured the
-        # barrier NEUTRAL-TO-WORSE (best 6.23 vs 5.72 s, p50 tie):
-        # materializing + re-reading the exploded prefix rows costs as
-        # much as recomputing them, because one copy rides inside the
-        # b-side BROADCAST build rather than a second full pass. Default
-        # stays streaming; the flag is for corpora with long documents
-        # (bigger prefix subtree, same narrow prefix rows) where the
-        # balance tips. Both paths byte-equal:
-        # test_prefix_join_barrier_twin_matches_streaming.
-        # ADVICE r12 caveat when the flag IS used: localCheckpoint
-        # blocks live in EXECUTOR storage with truncated lineage — on a
-        # non-local cluster an executor loss makes the join
-        # unrecoverable mid-query, and long-lived sessions that call
-        # this repeatedly accumulate cached blocks until context GC
-        # collects the DataFrame; prefer a real checkpoint dir (or
-        # unpersist after materializing the join) in such deployments.
-        )
-    if materialize_prefixes:
-        prefixes = prefixes.localCheckpoint(eager=False)
+    )
+    # no barrier, although `prefixes` feeds BOTH sides of the candidate
+    # self-join and the subtree above runs once per side: three paired
+    # A/B rounds at sf0.1 (r12 batch 7) measured a localCheckpoint here
+    # NEUTRAL-TO-WORSE (best 6.23 vs 5.72 s, p50 tie) — materializing +
+    # re-reading the exploded prefix rows costs as much as recomputing
+    # them, because one copy rides inside the b-side BROADCAST build,
+    # not a second pass.
     a = prefixes.select(
         F.col("_id").alias("a_id"),
         F.col("_s").alias("_sa"),

@@ -105,11 +105,7 @@ def ensure_parallelism(df: DataFrame, min_factor: float = 1.0) -> DataFrame:
     return df
 
 
-def zorder_key(
-    x,  # Column: first dimension (non-negative int)
-    y,  # Column: second dimension (non-negative int)
-    bits: int = 16,
-):
+def zorder_key(x: str, y: str, bits: int = 16) -> Column:
     """Z-order (Morton) curve key: interleave the low ``bits`` of two
     dimensions — the multi-dimension data-layout key behind Delta/
     Iceberg ``OPTIMIZE ZORDER BY``. Rows sorted by this key cluster in
@@ -117,8 +113,11 @@ def zorder_key(
     either predicate — the layout story for 100 TB fact tables queried
     by more than one column.
 
-    Pure integer shift/mask expression (whole-stage codegen, and
-    reproducible in any engine as the same 2·bits-term sum).
+    ``x`` and ``y`` are SQL snippets (column names or expressions) of
+    non-negative ints. Pure integer shift/mask expression (whole-stage
+    codegen, and reproducible in any engine as the same 2·bits-term
+    sum), built as ONE SQL string so construction is a single JVM
+    parse instead of ~8 py4j round trips per bit (r12).
 
     Dimensions are taken FLOOR-mod ``2^bits`` (junk v2, round 10): a
     negative key under the old trunc-`%` stayed negative and the
@@ -127,35 +126,17 @@ def zorder_key(
     same junk row produced two DIFFERENT garbage keys. pmod wraps
     negatives into the ring identically everywhere.
     """
-    from pyspark.sql import functions as F
-
-    if isinstance(x, str) and isinstance(y, str):
-        # SQL fast path (r12): the Column loop below costs ~8 py4j
-        # round trips per bit (~130 per key, two keys per caller);
-        # building the identical 2·bits-term sum as ONE SQL string is a
-        # single JVM parse. Term order and types match the Column path
-        # exactly (pinned: test_zorder_sql_twin_bitexact).
-        xm = f"pmod({x}, {1 << bits})"
-        ym = f"pmod({y}, {1 << bits})"
-        terms = ["CAST(0 AS BIGINT)"]
-        for j in range(bits):
-            terms.append(
-                f"shiftleft(CAST(shiftright({xm}, {j}) % 2 AS BIGINT), {2 * j})"
-            )
-            terms.append(
-                f"shiftleft(CAST(shiftright({ym}, {j}) % 2 AS BIGINT), {2 * j + 1})"
-            )
-        return F.expr(" + ".join(terms))
-    xm = F.pmod(x, F.lit(1 << bits))
-    ym = F.pmod(y, F.lit(1 << bits))
-    key = F.lit(0).cast("long")
+    xm = f"pmod({x}, {1 << bits})"
+    ym = f"pmod({y}, {1 << bits})"
+    terms = ["CAST(0 AS BIGINT)"]
     for j in range(bits):
-        key = (
-            key
-            + F.shiftleft((F.shiftright(xm, j) % 2).cast("long"), 2 * j)
-            + F.shiftleft((F.shiftright(ym, j) % 2).cast("long"), 2 * j + 1)
+        terms.append(
+            f"shiftleft(CAST(shiftright({xm}, {j}) % 2 AS BIGINT), {2 * j})"
         )
-    return key
+        terms.append(
+            f"shiftleft(CAST(shiftright({ym}, {j}) % 2 AS BIGINT), {2 * j + 1})"
+        )
+    return F.expr(" + ".join(terms))
 
 
 def zorder_sql(x: str, y: str, bits: int = 16) -> str:

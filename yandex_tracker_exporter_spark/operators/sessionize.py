@@ -98,7 +98,6 @@ def status_metrics(
     changelog: DataFrame,
     issues: DataFrame | None = None,
     config: EngineConfig = DEFAULT_CONFIG,
-    include_busdays: bool = True,
 ) -> DataFrame:
     """Tracker-parity per-(issue, status) cycle-time metrics (A1).
 
@@ -145,17 +144,13 @@ def status_metrics(
     duration = F.abs(
         F.unix_timestamp("end_ts") - F.unix_timestamp("start_ts")
     ).cast("long")
-    busdays = (
-        business_seconds(
-            "start_ts",
-            "end_ts",
-            workdays=config.workdays,
-            hour_start=config.business_hour_start,
-            hour_end=config.business_hour_end,
-            holiday_dates=config.holiday_dates,
-        )
-        if include_busdays
-        else F.lit(0).cast("long")
+    busdays = business_seconds(
+        "start_ts",
+        "end_ts",
+        workdays=config.workdays,
+        hour_start=config.business_hour_start,
+        hour_end=config.business_hour_end,
+        holiday_dates=config.holiday_dates,
     )
 
     per_status = (

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from yandex_tracker_exporter_spark.functions.text import _qident
+
 #: Deterministic pseudo-random hyperplane component for (plane j, dim d):
 #: Knuth-multiplicative scramble of the index, mapped to [-0.5, 0.5).
 def _plane_component(j: int, d: int) -> float:
@@ -55,11 +57,8 @@ def _plane_component(j: int, d: int) -> float:
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """SQL text of :func:`dot` over two column/SQL snippets — parsed
-    JVM-side in ONE py4j call instead of ~30 Column-op round trips
-    (r12 optimization: plan construction was ~60 s of the 151-query
-    suite, mostly py4j socket latency). Same expression tree as the
-    Column path: widen-to-double products, 0.0D init, left-fold sum."""
+    """SQL text of :func:`dot` over two column/SQL snippets: widen-to-
+    double products, 0.0D init, left-fold sum."""
     return (
         f"aggregate(zip_with({a}, {b}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -76,46 +75,29 @@ def _norm_sql(a: str) -> str:
     )
 
 
-def _qident(name: str) -> str:
-    """Backtick-quote a column name for use in the SQL fast paths."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two float-array columns (built-in expressions).
+def dot(a: str, b: str) -> Column:
+    """Dot product of two float-array SQL snippets (column names or
+    expressions), built-in expressions only.
 
     Elements are widened to double BEFORE multiplying so the reduction
     is a pure double left-fold — deterministic and reproducible by any
     engine that folds in the same order (float32 intermediate products
     would diverge from the DuckDB oracle).
 
-    Accepts SQL snippets (str) for both sides — the fast-construction
-    path (one JVM parse); Columns keep the expression-builder path for
-    callers inside higher-order-function lambdas. Both produce the
-    identical expression tree (pinned: test_sql_twins_bitexact)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
+    Built as ONE SQL string parsed JVM-side in a single py4j call
+    instead of ~30 Column-op round trips (r12 optimization: plan
+    construction was ~60 s of the 151-query suite, mostly py4j socket
+    latency)."""
+    return F.expr(_dot_sql(a, b))
 
 
-def norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(_norm_sql(a))
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-    )
+def norm(a: str) -> Column:
+    """Euclidean norm of a float-array SQL snippet (see :func:`dot`)."""
+    return F.expr(_norm_sql(a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float-array columns.
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of two float-array SQL snippets.
 
     Crash-proof: ``try_divide`` yields NULL instead of an ANSI
     DIVIDE_BY_ZERO when either vector has zero norm — the driver runs
@@ -130,11 +112,9 @@ def cosine(a: Column, b: Column) -> Column:
     quarantine rows first — :func:`usable_vectors`, or the
     per-row-norm + :func:`_usable_norm` pattern every operator in this
     module uses."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"try_divide({_dot_sql(a, b)}, {_norm_sql(a)} * {_norm_sql(b)})"
-        )
-    return F.try_divide(dot(a, b), norm(a) * norm(b))
+    return F.expr(
+        f"try_divide({_dot_sql(a, b)}, {_norm_sql(a)} * {_norm_sql(b)})"
+    )
 
 
 def usable_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -268,7 +248,7 @@ def cosine_topk(
 
 
 def lsh_bucket_key(
-    vec: Column | str, num_planes: int = 8, dim: int = 64, offset: int = 0
+    vec: str, num_planes: int = 8, dim: int = 64, offset: int = 0
 ) -> Column:
     """Sign-LSH bucket id: bit j = 1 iff <vec, plane_{offset+j}> >= 0.
 
@@ -276,40 +256,24 @@ def lsh_bucket_key(
     multi-band scheme passes ``offset=b*num_planes`` so every band hashes
     with its own planes.
 
-    Accepts a SQL snippet (str) for ``vec``: the whole key — plane
-    literals, projections, sign bits, sum — is then built as ONE SQL
-    string and parsed JVM-side in a single py4j call (r12: the Column
-    path cost ~35 round trips per plane; this query family builds up to
-    32 planes). Identical expression tree either way (pinned test)."""
-    if isinstance(vec, str):
-        bits = []
-        for j in range(num_planes):
-            planes = (
-                "array("
-                + ",".join(
-                    repr(_plane_component(offset + j, d)) + "D"
-                    for d in range(dim)
-                )
-                + ")"
-            )
-            bits.append(
-                f"CASE WHEN {_dot_sql(vec, planes)} >= 0 "
-                f"THEN {1 << j} ELSE 0 END"
-            )
-        return F.expr(f"CAST({' + '.join(bits)} AS INT)")
-    key = None
+    ``vec`` is a SQL snippet: the whole key — plane literals,
+    projections, sign bits, sum — is built as ONE SQL string and parsed
+    JVM-side in a single py4j call (r12: a Column build cost ~35 round
+    trips per plane; this query family builds up to 32 planes). The
+    double literals are repr()-rendered, which round-trips exactly."""
+    bits = []
     for j in range(num_planes):
-        # string-built double literals: one JVM parse instead of ``dim``
-        # py4j round-trips (repr round-trips doubles exactly)
-        planes = F.expr(
+        planes = (
             "array("
-            + ",".join(repr(_plane_component(offset + j, d)) + "D" for d in range(dim))
+            + ",".join(
+                repr(_plane_component(offset + j, d)) + "D" for d in range(dim)
+            )
             + ")"
         )
-        projection = dot(vec, planes)
-        bit = F.when(projection >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        key = bit if key is None else key + bit
-    return key.cast("int")
+        bits.append(
+            f"CASE WHEN {_dot_sql(vec, planes)} >= 0 THEN {1 << j} ELSE 0 END"
+        )
+    return F.expr(f"CAST({' + '.join(bits)} AS INT)")
 
 
 def lsh_bucket_topk(
@@ -470,50 +434,28 @@ def ivf_topk(
             F.struct(
                 F.col(id_col).alias("cid"),
                 F.col(vec_col).alias("cv"),
-                norm(F.col(vec_col)).alias("cn"),
+                norm(_qident(vec_col)).alias("cn"),
             ).alias("_c")
         )
         # single row holding all centroids, sorted by id (collect_list
         # order is not deterministic; array_sort on the struct is)
         .agg(F.array_sort(F.collect_list("_c")).alias("_cents"))
     )
-
-    def ranked_centroids(vec: Column, vnorm: Column) -> Column:
-        """Centroid structs (cosine, cid) sorted best-first, exactly the
-        (cosine desc, centroid_id asc) order of a row_number window.
-        Norms arrive precomputed — the row norm once per row (not once
-        per centroid) and the centroid norms baked into the broadcast."""
-        scored = F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                (dot(vec, c["cv"]) / (vnorm * c["cn"])).alias("cd"),
-                c["cid"].alias("cid"),
-            ),
-        )
-        return F.array_sort(
-            scored,
-            lambda l, r: F.when(l["cd"] > r["cd"], F.lit(-1))
-            .when(l["cd"] < r["cd"], F.lit(1))
-            .when(l["cid"] < r["cid"], F.lit(-1))
-            .when(l["cid"] > r["cid"], F.lit(1))
-            .otherwise(F.lit(0)),
-        )
+    # per-centroid cosine of the row vector `_v` (norm `_vn`). Norms
+    # arrive precomputed — the row norm once per row (not once per
+    # centroid) and the centroid norms baked into the broadcast.
+    cent_cd = f"{_dot_sql('_v', 'c.cv')} / (_vn * c.cn)"
 
     corpus_v = corpus.select(
-        F.col(id_col), F.col(vec_col).alias("_v"), norm(F.col(vec_col)).alias("_vn")
+        F.col(id_col), F.col(vec_col).alias("_v"), norm(_qident(vec_col)).alias("_vn")
     )
     # corpus-side argmax via builtin array_max on (cd, -cid) structs:
     # lexicographic struct max = highest cosine, ties to the LOWEST
     # centroid id — identical to the (cd desc, cid asc) window order,
     # with no per-element comparator lambda on the big side
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                (dot(F.col("_v"), c["cv"]) / (F.col("_vn") * c["cn"])).alias("cd"),
-                (-c["cid"]).alias("negcid"),
-            ),
-        )
+    best = F.expr(
+        f"array_max(transform(_cents, "
+        f"c -> named_struct('cd', {cent_cd}, 'negcid', -c.cid)))"
     )
     assigned = corpus_v.join(F.broadcast(centroids)).select(
         F.col(id_col),
@@ -522,18 +464,24 @@ def ivf_topk(
         (-best["negcid"]).alias("cluster_id"),
     )
 
+    # query side: centroid structs (cosine, cid) sorted best-first,
+    # exactly the (cosine desc, centroid_id asc) order of a row_number
+    # window; each query probes the first ``nprobe``
+    ranked_centroids = (
+        f"array_sort(transform(_cents, "
+        f"c -> named_struct('cd', {cent_cd}, 'cid', c.cid)), "
+        "(l, r) -> CASE WHEN l.cd > r.cd THEN -1 WHEN l.cd < r.cd THEN 1 "
+        "WHEN l.cid < r.cid THEN -1 WHEN l.cid > r.cid THEN 1 ELSE 0 END)"
+    )
     queries_v = queries.select(
-        F.col(id_col), F.col(vec_col).alias("_v"), norm(F.col(vec_col)).alias("_vn")
+        F.col(id_col), F.col(vec_col).alias("_v"), norm(_qident(vec_col)).alias("_vn")
     )
     probes = queries_v.join(F.broadcast(centroids)).select(
         F.col(id_col).alias("query_id"),
         F.col("_v").alias("_qv"),
         F.col("_vn").alias("_qn"),
         F.explode(
-            F.transform(
-                F.slice(ranked_centroids(F.col("_v"), F.col("_vn")), 1, nprobe),
-                lambda s: s["cid"],
-            )
+            F.expr(f"transform(slice({ranked_centroids}, 1, {nprobe}), s -> s.cid)")
         ).alias("cluster_id"),
     )
 
@@ -551,9 +499,7 @@ def ivf_topk(
     scored = candidates.select(
         "query_id",
         "neighbor_id",
-        (dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))).alias(
-            "cosine_sim"
-        ),
+        (dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn"))).alias("cosine_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
